@@ -37,6 +37,8 @@ def main() -> None:
     ap.add_argument("--suffix", default="after")
     ap.add_argument("--repeats", type=int, default=int(os.environ.get("SPARK_GRAFT_QUERY_REPEATS", "3")))
     args = ap.parse_args()
+    if args.explain and len(args.queries) != 1:
+        ap.error("--explain takes exactly one query name")
 
     from etl_geo_dem_spark.queries import REGISTRY
 

@@ -53,9 +53,11 @@ class EngineConfig:
     # knob; batch replays amortize it and should keep the default.
     epoch_manifest_async: bool = False
     # mor + "agg" only: fuse the dedup exchange with the writer's bucket
-    # clustering — ONE shuffle per epoch (repartition by storage bucket, then
-    # aggregate by (bucket, key), which Spark plans WITHOUT a second exchange
-    # because bucket-partitioning already co-locates every key) instead of
+    # clustering — ONE shuffle per epoch (repartition by storage bucket over
+    # the writer's own slot count, lake_table.bucket_write_slots: 4× the
+    # smaller of n_buckets and the cluster's parallelism; then aggregate by
+    # (bucket, key), which Spark plans WITHOUT a second exchange because
+    # bucket-partitioning already co-locates every key) instead of
     # key-exchange + bucket-exchange. Measured at the bench shape (5.25M-event
     # epochs, local[32]): 3.6 s → 2.3 s per epoch warm (r6). The trade,
     # exactly as for ``bucket_sorted``: no map-side combine BEFORE the

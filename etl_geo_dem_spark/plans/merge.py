@@ -49,6 +49,7 @@ from etl_geo_dem_spark.plans.lake_table import (
     LakeTable,
     bucket_expr,
     carry_excluding,
+    cluster_by_bucket,
 )
 from etl_geo_dem_spark.schemas import KEY_COLS, ORDER_COLS
 
@@ -337,17 +338,17 @@ def _apply_changes_once(
     elif strategy == "agg" and cfg.merge_mode == "mor" and cfg.mor_fused_exchange:
         # fused-exchange MOR apply (round 6, guide §2.4 "two operations keyed
         # the same way can share one exchange"): repartition ONCE by the
-        # storage bucket (4× slots — the writer's own anti-collision layout),
-        # then aggregate by (bucket, key). Bucket is a pure function of the
-        # key, so bucket-partitioning already co-locates every key and Spark
-        # plans the aggregate WITHOUT its own exchange; the writer then takes
-        # the output pre_partitioned. One shuffle + one stage barrier per
-        # epoch instead of two of each (measured 3.6 s → 2.3 s per bench
-        # epoch warm). Trade and opt-out documented on
+        # storage bucket (cluster_by_bucket — the writer's own exchange, slots
+        # sized to the cluster by bucket_write_slots), then aggregate by
+        # (bucket, key). Bucket is a pure function of the key, so
+        # bucket-partitioning already co-locates every key and Spark plans
+        # the aggregate WITHOUT its own exchange; the writer then takes the
+        # output pre_partitioned. One shuffle + one stage barrier per epoch
+        # instead of two of each. Trade and opt-out documented on
         # EngineConfig.mor_fused_exchange.
         bucketed = batch.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
         winners = lww_winners(
-            bucketed.repartition(4 * n_buckets, F.col(BUCKET_COL)),
+            cluster_by_bucket(bucketed, n_buckets),
             [BUCKET_COL, *key_cols], order_cols, strategy="agg",
         )
         pre_partitioned = True

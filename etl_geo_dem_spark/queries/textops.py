@@ -15,6 +15,8 @@ Cross-engine portability notes baked into the designs:
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -380,7 +382,16 @@ def dedup_ngram_jaccard_pairs(spark, sf_dir):
     )
     par = spark.sparkContext.defaultParallelism
     lp = (F.col("sz") - F.ceil(F.lit(tau) * F.col("sz")) + 1).cast("int")
-    li = (F.col("sz") - F.floor(F.lit(8) * F.col("sz") / 9) + 1).cast("int")
+    # index-prefix ratio 2τ/(1+τ) as an exact fraction (8/9 at τ = 0.8):
+    # a float ratio can round above the exact value, and the floor would then
+    # cut the prefix one id short (pruning true pairs the verify never sees)
+    exact_tau = Fraction(str(tau))
+    index_ratio = 2 * exact_tau / (1 + exact_tau)
+    li = (
+        F.col("sz")
+        - F.floor(F.lit(index_ratio.numerator) * F.col("sz") / index_ratio.denominator)
+        + 1
+    ).cast("int")
     probe = docs_ids.select(
         "doc_id", "sz", F.posexplode(F.slice("arr", F.lit(1), lp))
     ).select(

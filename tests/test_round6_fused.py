@@ -1,7 +1,9 @@
 """Round-6 fused-exchange MOR apply (EngineConfig.mor_fused_exchange):
 the dedup aggregate and the writer's bucket clustering share ONE shuffle.
 Pins (a) final-state equivalence with the classic two-exchange plan across
-restarts and schema evolution, and (b) the single-Exchange plan shape."""
+restarts and schema evolution, (b) the single-Exchange plan shape of the
+engine's own bucket exchange and its cluster-sized slot count, and (c) one
+data file per touched bucket per epoch."""
 
 from __future__ import annotations
 
@@ -12,7 +14,13 @@ from pyspark.sql import functions as F
 
 from etl_geo_dem_spark.config import EngineConfig
 from etl_geo_dem_spark.operators.lww import lww_winners
-from etl_geo_dem_spark.plans.lake_table import BUCKET_COL, LakeTable, bucket_expr
+from etl_geo_dem_spark.plans.lake_table import (
+    BUCKET_COL,
+    LakeTable,
+    bucket_expr,
+    bucket_write_slots,
+    cluster_by_bucket,
+)
 from etl_geo_dem_spark.plans.merge import apply_changes
 from etl_geo_dem_spark.schemas import STATE_SCHEMA
 from etl_geo_dem_spark.sources.changes import epoch_batches, generate_changes
@@ -43,21 +51,57 @@ def test_fused_final_state_equals_split(spark, warehouse):
     assert a.equals(b)
 
 
+def test_bucket_write_slots_follow_the_cluster():
+    """4× the smaller of bucket count and parallelism: the wide-cluster shape
+    keeps its 4×-buckets anti-collision layout, a 2-core one drops the empty
+    write tasks."""
+    assert bucket_write_slots(32, 32) == 128
+    assert bucket_write_slots(32, 2) == 8
+    assert bucket_write_slots(8, 4) == 16
+    assert bucket_write_slots(1, 1) == 4
+
+
 def test_fused_agg_is_single_exchange(spark):
-    """The fused plan's whole point: repartition by storage bucket, then
-    aggregate by (bucket, key) WITHOUT a second exchange — Spark must accept
-    hash(bucket) partitioning as satisfying the (bucket, key) clustering."""
+    """The fused plan's whole point: repartition by storage bucket (through
+    the engine's own cluster_by_bucket), then aggregate by (bucket, key)
+    WITHOUT a second exchange — Spark must accept hash(bucket) partitioning
+    as satisfying the (bucket, key) clustering."""
     ch = generate_changes(spark, 5_000, n_conv=100, turns_per_conv=10,
                           n_epochs=1, n_partitions=4)
     bucketed = ch.withColumn(BUCKET_COL, bucket_expr("conv_id", 8))
     winners = lww_winners(
-        bucketed.repartition(32, F.col(BUCKET_COL)),
+        cluster_by_bucket(bucketed, 8),
         [BUCKET_COL, "conv_id", "turn_idx"], ["ts", "lsn"], strategy="agg",
     )
     plan = winners._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange")
     assert n_exchanges == 1, f"expected 1 Exchange, got {n_exchanges}:\n{plan}"
-    assert BUCKET_COL in plan.split("Exchange", 1)[1].split("\n", 1)[0]
+    exchange = plan.split("Exchange", 1)[1].split("\n", 1)[0]
+    assert BUCKET_COL in exchange
+    slots = bucket_write_slots(8, spark.sparkContext.defaultParallelism)
+    assert f", {slots})" in exchange, exchange
+
+
+def test_mor_epoch_writes_one_file_per_touched_bucket(spark, warehouse):
+    """Fewer write slots than buckets put several buckets in one task; the
+    bucket exchange must still hand each bucket to exactly one task, so an
+    epoch below the per-file row cap writes exactly one delta file for
+    every bucket its batch touches."""
+    table = LakeTable.create(
+        spark, os.path.join(warehouse, "per_bucket"), STATE_SCHEMA, n_buckets=32
+    )
+    ch = generate_changes(spark, 20_000, n_conv=400, turns_per_conv=10,
+                          n_epochs=1, n_partitions=4)
+    batch = ch.filter(F.col("epoch") == 0)
+    cfg = EngineConfig(dedup_strategy="agg", merge_mode="mor", n_buckets=32)
+    assert bucket_write_slots(32, spark.sparkContext.defaultParallelism) < 32
+    apply_changes(table, batch, 0, cfg)
+    expected = sorted(
+        r[0] for r in batch.select(bucket_expr("conv_id", 32)).distinct().collect()
+    )
+    deltas = [f for f in table._files_of(table.snapshot_meta())
+              if f["kind"] == "delta"]
+    assert sorted(f["bucket"] for f in deltas) == expected
 
 
 @pytest.mark.parametrize("fused", [True, False])
